@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.io.{InputStream, OutputStream}
+import java.io.{FileNotFoundException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -29,6 +29,14 @@ import scala.collection.mutable.ArrayBuffer
   *    al.) is preserved.
   *  - `list_path` 404 → empty result, not error (client.py:523-524) —
   *    preserved.
+  *
+  * Round trips: each metadata op (status, properties, delete, rename)
+  * makes one status call per path it inspects — a `getFileStatus`, one
+  * HEAD on ABFS, matching the reference's single HEAD
+  * (`get_properties_path`, client.py:424-447). A missing path is that
+  * call's `FileNotFoundException`, not an `exists` probe ahead of it.
+  * Reading properties opens the sidecar directly: no sidecar is the
+  * `open` failing. Whole-object reads make one `open` and read in bulk.
   */
 final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   import LakeClient._
@@ -103,11 +111,13 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     * body-less HEAD as JSON (always raises); here properties round-trip
     * from the sidecar. */
   def getFilesystemProperties(filesystem: String): Map[String, String] =
-    readProps(fsRoot(filesystem))
+    pathProps(fsRoot(filesystem))
 
   /** set_properties_filesystem — client.py:308-325 (x-ms-properties). */
-  def setFilesystemProperties(filesystem: String, properties: Map[String, String]): Unit =
-    writeProps(fsRoot(filesystem), properties)
+  def setFilesystemProperties(filesystem: String, properties: Map[String, String]): Unit = {
+    val root = fsRoot(filesystem)
+    writeProps(propsPath(root, statusOf(root).exists(_.isDirectory)), properties)
+  }
 
   // -- path lifecycle: reference #6-#11 -----------------------------------
 
@@ -130,32 +140,36 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     * reference raises "File not found"). */
   def renamePath(filesystem: String, source: String, dest: String): Boolean = {
     val src = resolve(filesystem, source)
-    // missing source -> false, mirroring the reference's explicit
-    // pre-check (client.py:377-384); some FileSystem impls throw instead
-    if (!fs.exists(src)) return false
-    val isDir = fs.getFileStatus(src).isDirectory
     val dst = resolve(filesystem, dest)
-    // POSIX/HDFS rename semantics: renaming INTO an existing directory
-    // lands the source at dst/<srcName> — the sidecar must follow the
-    // file's ACTUAL landing spot, not the raw dest argument
-    val landed =
-      if (fs.exists(dst) && fs.getFileStatus(dst).isDirectory)
-        new Path(dst, src.getName)
-      else dst
-    val ok = fs.rename(src, dst)
+    // missing source -> false, mirroring the reference's explicit
+    // pre-check (client.py:377-384); some FileSystem impls throw instead.
     // Properties travel with the path, as in ADLS. A directory's sidecar
     // lives inside it and moves with the rename; a file's sits beside it
     // and must be moved explicitly.
-    if (ok && !isDir) {
-      // an overwritten target's properties die with it — clear the landing
-      // spot's sidecar even when the SOURCE has none (else the renamed
-      // file inherits the replaced file's properties)
-      val dstSidecar = fileSidecar(landed)
-      fs.delete(dstSidecar, false)
-      val srcSidecar = fileSidecar(src)
-      if (fs.exists(srcSidecar)) fs.rename(srcSidecar, dstSidecar)
+    statusOf(src) match {
+      case None => false
+      case Some(st) if st.isDirectory => fs.rename(src, dst)
+      case Some(_) =>
+        // POSIX/HDFS rename semantics: renaming INTO an existing directory
+        // lands the source at dst/<srcName> — the sidecar must follow the
+        // file's ACTUAL landing spot, not the raw dest argument
+        val landed =
+          if (statusOf(dst).exists(_.isDirectory)) new Path(dst, src.getName) else dst
+        val ok = fs.rename(src, dst)
+        if (ok) {
+          // an overwritten target's properties die with it — clear the
+          // landing spot's sidecar even when the SOURCE has none (else the
+          // renamed file inherits the replaced file's properties)
+          val dstSidecar = fileSidecar(landed)
+          fs.delete(dstSidecar, false)
+          // probe first: most files have no properties, and renaming a
+          // missing sidecar costs more than the probe (the raw local FS
+          // falls back to a copy that fails with FileNotFoundException)
+          val srcSidecar = fileSidecar(src)
+          if (fs.exists(srcSidecar)) fs.rename(srcSidecar, dstSidecar)
+        }
+        ok
     }
-    ok
   }
 
   /** delete_path — client.py:397-422; recursive flag. Properties die with
@@ -164,7 +178,10 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
     * sidecar lives inside it and is removed by the recursive delete. */
   def deletePath(filesystem: String, path: String, recursive: Boolean = false): Boolean = {
     val p = resolve(filesystem, path)
-    val isDir = fs.exists(p) && fs.getFileStatus(p).isDirectory
+    val isDir = statusOf(p) match {
+      case None => return false // 404: nothing to delete, as fs.delete reports
+      case Some(st) => st.isDirectory
+    }
     val ok =
       if (isDir && !recursive) {
         // a directory's props sidecar lives INSIDE it and is hidden from
@@ -191,7 +208,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   /** get_properties_path action=getStatus — client.py:424-447. */
   def pathStatus(filesystem: String, path: String): Option[PathInfo] = {
     val p = resolve(filesystem, path)
-    if (fs.exists(p)) Some(PathInfo.of(fs.getFileStatus(p), readProps(p))) else None
+    statusOf(p).map(st => PathInfo.of(st, readProps(p, st)))
   }
 
   /** get_properties_path action=getAccessControl — client.py:429-438.
@@ -314,12 +331,11 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
 
   // -- data plane: reference #12-#16 --------------------------------------
 
-  /** read_path — client.py:528-546 (`Range: bytes=0-`). Whole object. */
-  def readBytes(filesystem: String, path: String): Array[Byte] = {
-    val in = fs.open(resolve(filesystem, path))
-    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    finally in.close()
-  }
+  /** read_path — client.py:528-546 (`Range: bytes=0-`). Whole object:
+    * one `open` (the reference's one GET), then a bulk read to EOF — no
+    * status call to learn the size first. */
+  def readBytes(filesystem: String, path: String): Array[Byte] =
+    readAll(resolve(filesystem, path))
 
   /** Ranged read — the `Range: bytes=o-` form Parquet column-chunk reads
     * use (SURVEY.md §3.3): seek + bounded read via FSDataInputStream. */
@@ -392,8 +408,9 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   def setPathProperties(filesystem: String, path: String,
                         properties: Map[String, String]): Unit = {
     val p = resolve(filesystem, path)
-    require(fs.exists(p), s"setPathProperties: no such path: $path")
-    writeProps(p, properties)
+    val st = statusOf(p)
+    require(st.isDefined, s"setPathProperties: no such path: $path")
+    writeProps(propsPath(p, st.get.isDirectory), properties)
   }
 
   /** update_path action=setAccessControl — client.py:587-588 with the
@@ -454,7 +471,7 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   }
 
   def getPathProperties(filesystem: String, path: String): Map[String, String] =
-    readProps(resolve(filesystem, path))
+    pathProps(resolve(filesystem, path))
 
   // -- DataFrame surface (BASELINE.json `spark_approach`) -----------------
 
@@ -760,11 +777,27 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
   private def fileSidecar(p: Path): Path =
     new Path(p.getParent, s".${p.getName}$PropsSuffix")
 
-  private def propsPath(p: Path): Path =
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) new Path(p, PropsFileName)
-    else fileSidecar(p)
+  /** Sidecar location for `p`: inside a directory, beside anything else. */
+  private def propsPath(p: Path, isDirectory: Boolean): Path =
+    if (isDirectory) new Path(p, PropsFileName) else fileSidecar(p)
 
-  private def writeProps(p: Path, props: Map[String, String]): Unit = {
+  /** One status call: None when `p` does not exist. */
+  private def statusOf(p: Path): Option[FileStatus] =
+    try Some(fs.getFileStatus(p))
+    catch { case _: FileNotFoundException => None }
+
+  /** One `open`, then a bulk read to EOF. */
+  private def readAll(p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes()
+    finally in.close()
+  }
+
+  /** Properties of `p`; a missing path has none. */
+  private def pathProps(p: Path): Map[String, String] =
+    statusOf(p).fold(Map.empty[String, String])(readProps(p, _))
+
+  private def writeProps(pp: Path, props: Map[String, String]): Unit = {
     // keys are stored bare in the comma/equals-joined sidecar line
     // (values are base64) — a ',' or '=' in a key would write fine and
     // then poison EVERY later read with a parse error; validate like
@@ -773,20 +806,16 @@ final class LakeClient(val fs: FileSystem, val accountRoot: Path) {
       require(k.nonEmpty && !k.exists(c => c == ',' || c == '=' || c == '\n'),
         s"property key must be non-empty and contain no ',', '=' or newline: '$k'")
     }
-    val out = fs.create(propsPath(p), true)
+    val out = fs.create(pp, true)
     try out.write(encodeProps(props).getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def readProps(p: Path): Map[String, String] = {
-    val pp = propsPath(p)
-    if (!fs.exists(pp)) Map.empty
-    else decodeProps(new String({
-      val in = fs.open(pp)
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    }, StandardCharsets.UTF_8))
-  }
+  /** Properties of existing path `p`: one `open` of its sidecar, and
+    * none when that fails with no such file. */
+  private def readProps(p: Path, st: FileStatus): Map[String, String] =
+    try decodeProps(new String(readAll(propsPath(p, st.isDirectory)), StandardCharsets.UTF_8))
+    catch { case _: FileNotFoundException => Map.empty }
 
   private def copyStream(in: InputStream, out: OutputStream, chunkSize: Int): Long = {
     val buf = new Array[Byte](chunkSize)
