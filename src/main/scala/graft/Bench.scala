@@ -244,47 +244,21 @@ object Bench {
       (waited, probe)
     }
 
-    // SPARK_GRAFT_PROTOCOL=query-major: the RETIRED r12 sampling (4
-    // consecutive samples per query), kept ONLY as the measurement seam
-    // for the run-major lineage A/B (round 14 — VERDICT r13 #2b: the
-    // protocol switch made cross-round totals incomparable; the judge's
-    // dd3 measurement read 7.77 s in-suite vs 4.97 s isolated at the
-    // same box state). The driver never sets it; official artifacts are
-    // run-major.
-    val protocol = sys.env.getOrElse("SPARK_GRAFT_PROTOCOL", "run-major")
-    val (cold: Map[String, Either[String, Double]],
-         warmPasses: Seq[Map[String, Either[String, Double]]]) =
-      if (protocol == "query-major") {
-        currentPass.set("query-major")
-        val per = order.map { case (name, fn) =>
-          val c = once(name, fn)
-          val ws = (1 to 3).map { _ =>
-            if (c.isLeft) Left("cold run failed"): Either[String, Double]
-            else once(name, fn)
-          }
-          name -> ((c, ws))
-        }.toMap
-        stampPass("query-major") // post-run (see stampPass comment)
-        (per.map { case (k, v) => k -> v._1 },
-          (0 to 2).map(i => per.map { case (k, v) => k -> v._2(i) }))
-      } else {
-        currentPass.set("cold")
-        val c: Map[String, Either[String, Double]] =
-          order.map { case (name, fn) => name -> once(name, fn) }.toMap
-        stampPass("cold") // post-pass: the bursts must not precede timed work
-        val ws = (1 to 3).map { p =>
-          currentPass.set(s"gate$p")
-          val (gateWaited, gateProbe) = passGate()
-          currentPass.set(s"warm$p")
-          val m = order.map { case (name, fn) =>
-            name -> (if (c(name).isLeft) Left("cold run failed"): Either[String, Double]
-                     else once(name, fn))
-          }.toMap
-          stampPass(s"warm$p", gateWaited, gateProbe)
-          m
-        }
-        (c, ws)
-      }
+    currentPass.set("cold")
+    val cold: Map[String, Either[String, Double]] =
+      order.map { case (name, fn) => name -> once(name, fn) }.toMap
+    stampPass("cold") // post-pass: the bursts must not precede timed work
+    val warmPasses: Seq[Map[String, Either[String, Double]]] = (1 to 3).map { p =>
+      currentPass.set(s"gate$p")
+      val (gateWaited, gateProbe) = passGate()
+      currentPass.set(s"warm$p")
+      val m = order.map { case (name, fn) =>
+        name -> (if (cold(name).isLeft) Left("cold run failed"): Either[String, Double]
+                 else once(name, fn))
+      }.toMap
+      stampPass(s"warm$p", gateWaited, gateProbe)
+      m
+    }
     samplerStop.set(true) // timed window over; end anchors run unsampled
     currentPass.set("end")
 
@@ -375,8 +349,8 @@ object Bench {
       s""""errors":$errorsJson,"total_median":${fmt(totalMedian)},"spread":${fmt(spread)},""" +
       s""""contended":$contended,"contended_queries":$contendedQueriesJson,""" +
       s""""calibration":$calibration,""" +
-      s""""protocol":${jstr(protocol)},""" +
-      s""""methodology":"$protocol sampling${if (protocol == "query-major") " (RETIRED r12 protocol, kept as the lineage-A/B seam; official artifacts are run-major)" else ": pass1=cold over whole suite, passes2-4=warm over whole suite (one query's warm samples minutes apart, so min() discards any single burst)"}; warm=min(pass2..4);median=median(pass2..4);contended_queries=per-query median/min>2 (skipped under 0.1 s);contended=total_median/total>1.3;calibration=min-of-3 fixed probes at start/end + post-pass cpu/mt/mem/load stamps + load-gated launch${if (protocol == "query-major") "" else " + cpu-probe-gated warm passes (min-of-2 probe>1.3x rolling in-run reference (last-4 samples, capped 1.25x launch anchor, reset on exhausted budget) waits bounded; waited_s per pass) + ~20s in-pass cpu timeline with pass/query attribution"}",""" +
+      s""""protocol":"run-major",""" +
+      s""""methodology":"run-major sampling: pass1=cold over whole suite, passes2-4=warm over whole suite (one query's warm samples minutes apart, so min() discards any single burst); warm=min(pass2..4);median=median(pass2..4);contended_queries=per-query median/min>2 (skipped under 0.1 s);contended=total_median/total>1.3;calibration=min-of-3 fixed probes at start/end + post-pass cpu/mt/mem/load stamps + load-gated launch + cpu-probe-gated warm passes (min-of-2 probe>1.3x rolling in-run reference (last-4 samples, capped 1.25x launch anchor, reset on exhausted budget) waits bounded; waited_s per pass) + ~20s in-pass cpu timeline with pass/query attribution",""" +
       s""""sf":"$sfDir"}"""
     println(headline)
     // self-persist the COMPLETE artifact repo-side (round 12), and

@@ -3,30 +3,27 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared scaffolding for the measurement mains (round 12 — VERDICT r11
-  * #6): session construction, the replica corpus definitions, and the
-  * plain stage timer. SkewProbe/GateProbe/DdPerfProbe/DdDebug/
-  * KnnTierSweep and the ScaleSmoke each grew their own copies of these;
-  * one definition keeps every probe measuring THE SAME workload (the
-  * [[SkewCorpus]] discipline, extended to the replica corpora), so the
-  * next probe is a few lines of intent, not a file of scaffolding.
+/** Shared scaffolding for the measurement mains [[ScaleSmoke]] and
+  * [[StreamStateBench]] (round 12 — VERDICT r11 #6): session
+  * construction, parallelism and the replica corpus definitions. One
+  * definition keeps every main measuring THE SAME workload (the
+  * [[SkewCorpus]] discipline, extended to the replica corpora).
   *
-  * Deliberately NOT here: each probe's special timing semantics
-  * (SkewProbe's warm+min A/B, Bench's 4-run warm protocol, ScaleSmoke's
-  * calibrated/barred stages) — those ARE the probes. */
+  * Deliberately NOT here: each main's own timing semantics (Bench's
+  * 4-run warm protocol, ScaleSmoke's calibrated/barred stages). */
 object ProbeHarness {
 
-  /** Probe parallelism: the smoke/probe mains run local[32] unless the
-    * driver narrows it. */
+  /** Parallelism: the measurement mains run local[32] unless
+    * SPARK_GRAFT_CPUS narrows it. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** One source of session truth ([[graft.core.GraftSession]]) — a
     * hand-rolled diagnostic conf measurably diverged (NOTES round-3).
-    * Every probe session stamps the box-state calibration at startup
-    * (round 12): this host is co-tenanted and probe numbers are only
+    * Every session built here stamps the box-state calibration at
+    * startup (round 12): this host is co-tenanted and numbers are only
     * adjudicable next to a same-moment [[Calibration]] reading — the
-    * isolated-dd4 rerun needed a manual CalProbe run to interpret;
-    * now every probe main carries its stamp. ~4 s once per JVM. */
+    * isolated-dd4 rerun needed a manual calibration run to interpret;
+    * now every measurement main carries its stamp. ~4 s once per JVM. */
   def session(name: String): SparkSession = {
     val s = graft.core.GraftSession
       .builder(name, s"local[$cpus]", cpus)
@@ -67,13 +64,5 @@ object ProbeHarness {
       .withColumn("r", r)
       .select((col("vec_id") * replicas + col("r")).as("vec_id"), col("embedding"))
       .persist()
-  }
-
-  /** Plain one-shot stage timer: wall seconds + row count, one line. */
-  def timed(name: String)(body: => Long): Long = {
-    val t0 = System.nanoTime()
-    val rows = body
-    println(f"$name%-34s ${(System.nanoTime() - t0) / 1e9}%8.1f s  $rows%10d rows")
-    rows
   }
 }

@@ -63,7 +63,8 @@ object ScaleSmoke {
     // then carries its own calCpu so a contended stage reading is
     // adjudicable from the artifact without an isolated rerun
     // (VERDICT r11 #5 — the 100× records swung up to 4× with
-    // co-tenancy and each needed a manual GateProbe rerun).
+    // co-tenancy and each needed a manual isolated rerun; NOTES.md
+    // round-12 measurement records).
     println(f"cal: start cpu=${Calibration.cal3(Calibration.calCpu _)}%.2f " +
       f"mt=${Calibration.cal3(() => Calibration.calCpuMt())}%.2f " +
       f"mem=${Calibration.cal3(() => Calibration.calMemMt())}%.2f " +
@@ -697,7 +698,7 @@ object ScaleSmoke {
       // feasible tier lifts that (recall .75 at cos .4 needs ~350
       // tables). The op's contract is NEAR-DUP detection: at cos ≥ .99
       // the same formula gives ≥ .96 for ANY qualifying pair, so that
-      // band takes the hard bar (measured 1.000 at 20×, BandRecallProbe:
+      // band takes the hard bar (measured 1.000 at 20×, NOTES.md round 12:
       // marginal bands .10/.14, zero truth mass in [.5,.99), replica
       // band 5430/5430); raw threshold recall prints informationally.
       locally {

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The round-11 adversarial hot-key corpus, shared by [[SkewProbe]]
-  * (which measured the window vs agg+join Dedup forms on it) and
-  * [[ScaleSmoke]] (whose skew wall bars are ~4× those measurements):
+/** The round-11 adversarial hot-key corpus, on which the window vs
+  * agg+join Dedup forms were measured (NOTES.md round-11 measurement
+  * records), and which [[ScaleSmoke]]'s skew stages run on (its wall
+  * bars are ~4× those measurements):
   * single degenerate keys carry a constant fraction of the rows —
   *   - 5 % verbatim mega-copies of one text: one mega content-hash
   *     group (dd2) and one mega identical-SimHash group (dd5 stars);
@@ -14,8 +15,8 @@ import org.apache.spark.sql.functions._
   *     degenerate MinHash band buckets (dd3 segmented chains);
   *   - 90 % unique bodies sharing a verbatim boilerplate tail:
   *     stop-shingles with df ≈ 0.9·n (the keptShingles df cutoff).
-  * ONE definition so the smoke's bars keep corresponding to the probe's
-  * measured workload — the two builders drifting apart would silently
+  * ONE definition so the smoke's bars keep corresponding to the
+  * measured workload — a second builder drifting apart would silently
   * decouple the bars from what was measured.
   */
 object SkewCorpus {

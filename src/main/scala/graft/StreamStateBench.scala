@@ -30,8 +30,8 @@ object StreamStateBench {
   def main(args: Array[String]): Unit = {
     val batches = args.lift(0).map(_.toInt).getOrElse(20)
     val perBatch = args.lift(1).map(_.toInt).getOrElse(50000)
-    // ProbeHarness.cpus, not a re-read of the env var: the probe mains'
-    // single source for parallelism — a drift there would silently run
+    // ProbeHarness.cpus, not a re-read of the env var: the measurement
+    // mains' single source for parallelism — a drift there would silently run
     // this bench and the smoke it calibrates against at different widths
     val cpus = graft.ProbeHarness.cpus
 

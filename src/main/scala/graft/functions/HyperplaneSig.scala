@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * signature from 64 independent `vec_dot`-vs-literal columns folded
   * through when/add/shiftleft/or — ONE unsplittable expression tree
   * whose generated code ran at ~100 µs per dot (~1000× the fused-loop
-  * cost; SigMicroProbe: 13-17 s of task CPU for 2000 rows × 64 planes,
+  * cost; OPTIMIZATION_r17.md: 13-17 s of task CPU for 2000 rows × 64 planes,
   * identical with `-XX:-DontCompileHugeMethods`, 4× FASTER with
   * whole-stage codegen disabled — the monster method defeats the JIT
   * and every warm ss2/ss5 run re-paid 10-16 s of HotSpot recompilation).

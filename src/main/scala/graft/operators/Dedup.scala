@@ -169,7 +169,7 @@ object Dedup {
     * bsz/4096 bounded sorts instead of one O(n log n) straggler. Chosen
     * well above any test/fixture bucket (their chains are unchanged,
     * nseg = 1) and far below task-memory limits (~50 B/row × 4096). */
-  val ChainSegmentRows = 4096
+  private val ChainSegmentRows = 4096
 
   /** Word 3-shingles (distinct), the unit for MinHash and Jaccard. */
   private def shingleCol: Column = array_distinct(expr(
@@ -180,7 +180,7 @@ object Dedup {
     * above the signature computation, so the expensive hashing runs once
     * per join side instead of being shared at the aggregation shuffle.
     * Exchange-reuse position beats raw input parallelism. */
-  private[operators] def withShingles(df: DataFrame): DataFrame =
+  private def withShingles(df: DataFrame): DataFrame =
     df.withColumn("toks", split(col("text"), " "))
       .withColumn("shingles", shingleCol)
 
@@ -394,7 +394,7 @@ object Dedup {
     dd3FromParts(keptShingles(shingled, shingleDfCap(docs)), maxBucket)
   }
 
-  private[operators] def dd3FromParts(kept: DataFrame,
+  private def dd3FromParts(kept: DataFrame,
                            maxBucket: Int = MaxBucketSize): DataFrame = {
     // slim candidate generation: only (doc_id, band, bucket) plus five
     // dedup longs flow through the self-join; shingle sets rejoin AFTER
@@ -952,7 +952,7 @@ object Dedup {
     * canonicalizes by RDD identity, so the exchanges above it match and
     * AQE reuses them (probe: self-join over a persisted source = 0
     * reuses, 2× the shuffle; over a checkpointed source = 1 reuse,
-    * exactly half the shuffle — ReuseProbe).
+    * exactly half the shuffle — OPTIMIZATION_r16.md "Root cause").
     *
     * Trade (documented, accepted): checkpoint blocks are
     * NON-REPLAYABLE — on a cluster, losing an executor mid-query fails

@@ -145,7 +145,7 @@ object Similarity {
   }
 
   /** Pair-threshold LSH tier table: (estimated corpus rows → tables ×
-    * bits). Unlike kNN ([[KnnLshTiers]]: many SHORT tables, recall for
+    * bits). Unlike kNN ([[KnnLshHomeGeom]]: many SHORT tables, recall for
     * moderate-cosine neighbors), threshold search targets HIGH-cosine
     * pairs, whose per-bit collision probability is large — few LONGER
     * tables suffice (4×8 measured fine at fixture scale; measured fact
@@ -396,7 +396,7 @@ object Similarity {
     else if (cells <= 1024) 48
     else 96
 
-  private[graft] def ivfCellsFor(e: DataFrame): Int =
+  private def ivfCellsFor(e: DataFrame): Int =
     IvfCellTiers.find(estRowsOf(e) < _._1).getOrElse(IvfCellTiers.last)._2
 
   /** Floor for the IVF cell-population cap: caps below this never
@@ -415,7 +415,7 @@ object Similarity {
     * bits + a zero-norm pre-filter.) DORMANT at the measured
     * fixture/smoke scales (20× smoke: zero pairs lost); it exists for
     * the adversarial tail, exactly like its siblings. */
-  private[graft] def ivfMaxCellPop(e: DataFrame, cells: Int, nProbe: Int): Long =
+  private def ivfMaxCellPop(e: DataFrame, cells: Int, nProbe: Int): Long =
     math.max(MinIvfCellCap.toLong, 4L * nProbe * (estRowsOf(e) / cells))
 
   /** Multi-probe within-cell verified pair join shared by the seeded
@@ -463,8 +463,8 @@ object Similarity {
     * assigned frame's estimate passes through the assignment join /
     * 1-row cross join, where size propagation is garbage.
     *
-    * Why it matters — measured at the 100× probe (Ss5PerfProbe, NOTES
-    * round-13): a 200k-vector index side (~58 MB) is over the 10 MB
+    * Why it matters — measured at the 100× probe (NOTES.md round-13
+    * measurement records): a 200k-vector index side (~58 MB) is over the 10 MB
     * auto-broadcast threshold, so the cell join planned as a sort-merge
     * join and every one of the ~5G candidate rows paid the SMJ's
     * UnsafeRow output copy of BOTH 256-byte embeddings before the dot
@@ -867,33 +867,31 @@ object Similarity {
     VectorFunctions.ensureRegistered(s)
     val e = Tables.embeddings(s, dir)
     val routed =
-      if (estRowsOf(e) < KnnLshTiers.head._1) knnJoinGeom(e, k, 64, None)
+      if (estRowsOf(e) < KnnLshHomeRows) knnJoinGeom(e, k, 64, None)
       else knnJoinIvf(e, k, 64, Some(cachedModel(s, dir, e).centroids))
     routed.orderBy(col("vec_id"), col("rk"))
   }
 
-  /** LSH tier table for [[knnJoin]]'s hyperplane route: (estimated
-    * corpus rows → tables × bits), keeping tables*bits = 64 so the
-    * signature packs into one long. Only the HOME tier routes here now:
-    * 16×4 measures recall@5 .896 on the fixture, but the upper
+  /** Row limit of [[knnJoin]]'s hyperplane-LSH route: corpora estimated
+    * under it take [[KnnLshHomeGeom]], larger ones [[knnJoinIvf]]. The
+    * estimate comes from plan-statistics bytes at ~300 parquet bytes per
+    * 64-float row — the boundary is coarse on purpose. */
+  private val KnnLshHomeRows = 16000L
+
+  /** (tables, bits) of the home LSH route: 16×4, buckets ≥ ~1k-way split,
+    * recall-first (recall@5 .896 on the fixture); tables*bits = 64 so
+    * the signature packs into one long. There is no upper LSH tier: the
     * geometries that would bound buckets at corpus scale collapse on
     * rank-k recall — 8×8 measures .138, 4×16 .001 (SimilaritySpec tier
     * sweep; p_match = 1-(1-p_bit^bits)^tables dies in `bits` for the
     * moderate-cosine neighbors rank search must find, and the 64-bit
-    * pack caps `tables`). Corpora past the home tier take
-    * [[knnJoinIvf]] instead; the upper rows remain for the explicit
-    * [[knnJoinGeom]] seam and as the measured record of WHY the route
-    * changed. The estimate comes from plan-statistics bytes at ~300
-    * parquet bytes per 64-float row — tier boundaries are coarse on
-    * purpose. */
-  val KnnLshTiers: Seq[(Long, Int, Int)] = Seq(
-    (16000L, 16, 4),    // < 16k rows: buckets ≥ ~1k-way split, recall-first
-    (2000000L, 8, 8),   // measured recall@5 .138 — kept for the geom seam only
-    (Long.MaxValue, 4, 16)) // measured recall@5 .001 — kept for the geom seam only
+    * pack caps `tables`) — which is why the route past the home tier
+    * changed to [[knnJoinIvf]]. */
+  val KnnLshHomeGeom: (Int, Int) = (16, 4)
 
   /** Estimated embedding-corpus rows from optimizer byte statistics at
     * ~300 parquet bytes per 64-float row — the ONE row estimator behind
-    * every tier table (KnnLshTiers, PairLshTiers, IvfCellTiers), so a
+    * every tier table (KnnLshHomeRows, PairLshTiers, IvfCellTiers), so a
     * recalibration can never desynchronize them. Coarse on purpose;
     * launches no job. */
   private def estRowsOf(df: DataFrame): Long =
@@ -907,7 +905,7 @@ object Similarity {
     * the fixture table. Routes by estimated rows: the home tier takes
     * the 16×4 hyperplane-LSH join (recall@5 .896 measured), anything
     * larger takes [[knnJoinIvf]] — the upper LSH geometries collapse on
-    * rank-k recall (see [[KnnLshTiers]]).
+    * rank-k recall (see [[KnnLshHomeGeom]]).
     *
     * RECALL CLIFF past the home tier: because query construction must
     * stay job-free, the routed IVF path defaults to SEEDED random
@@ -919,7 +917,7 @@ object Similarity {
     * design (kernels end at the top-k posexplode); callers needing
     * presentation order sort at the query entry. */
   def knnJoin(e00: DataFrame, k: Int = 5, dim: Int = 64): DataFrame =
-    if (estRowsOf(e00) < KnnLshTiers.head._1) knnJoinGeom(e00, k, dim, None)
+    if (estRowsOf(e00) < KnnLshHomeRows) knnJoinGeom(e00, k, dim, None)
     else knnJoinIvf(e00, k, dim)
 
   /** [[knnJoin]] at the fitted operating point: same routing, but past
@@ -930,7 +928,7 @@ object Similarity {
     * the corpus is queried more than once; pair it with an external
     * model memo (the [[ss5KnnJoin]] discipline) to amortize the fit. */
   def knnJoinFitted(e00: DataFrame, k: Int = 5, dim: Int = 64): DataFrame =
-    if (estRowsOf(e00) < KnnLshTiers.head._1) knnJoinGeom(e00, k, dim, None)
+    if (estRowsOf(e00) < KnnLshHomeRows) knnJoinGeom(e00, k, dim, None)
     else {
       val m = KMeans.fit(e00.select(col("vec_id"), col("embedding")),
         k = ivfCellsFor(e00), maxIters = 5)
@@ -940,7 +938,7 @@ object Similarity {
   /** IVF-backed batch kNN — the route [[knnJoin]] takes past the home
     * LSH tier. Rank-recall is the measured reason (SimilaritySpec tier
     * sweep): random-hyperplane kNN needs many SHORT tables (16×4:
-    * recall@5 .896 on the fixture), but the upper [[KnnLshTiers]]
+    * recall@5 .896 on the fixture), but the upper LSH
     * geometries that keep buckets bounded at corpus scale collapse on
     * moderate-cosine rank-k neighbors — 8×8 measures .138 and 4×16
     * .001, because p_match = 1-(1-p_bit^bits)^tables dies in `bits`
@@ -1066,22 +1064,20 @@ object Similarity {
         col("t.score").as("cos"), (col("rk0") + 1).cast("int").as("rk"))
   }
 
-  /** [[knnJoin]] with explicit (tables, bits) — the ScaleSmoke seam for
-    * measuring an upper [[KnnLshTiers]] geometry's recall before a
-    * corpus lands on it (the lshNeardupGeom convention). */
+  /** [[knnJoin]]'s LSH route; `None` takes [[KnnLshHomeGeom]]. An
+    * explicit (tables, bits) is the SimilaritySpec seam that keeps the
+    * retired upper geometries' recall measured (the lshNeardupGeom
+    * convention). */
   private[graft] def knnJoinGeom(e00: DataFrame, k: Int, dim: Int,
                                  geom: Option[(Int, Int)]): DataFrame = {
     // many short tables, not few long ones, at small N: kNN needs recall
     // for moderate-cosine neighbors (p_match = 1-(1-p_bit^bits)^tables,
-    // p_bit ~ .6 for cos ~.3) — 16x4 gives ~.9 where 4x8 gives ~.08. At
-    // corpus scale bits grows (tier table above) to bound buckets.
-    val (tables, bits) = geom.getOrElse {
-      val t = KnnLshTiers.find(estRowsOf(e00) < _._1).getOrElse(KnnLshTiers.last)
-      (t._2, t._3)
-    }
+    // p_bit ~ .6 for cos ~.3) — 16x4 gives ~.9 where 4x8 gives ~.08.
+    // Corpus scale routes to knnJoinIvf instead (see KnnLshHomeGeom).
+    val (tables, bits) = geom.getOrElse(KnnLshHomeGeom)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("cos").desc, col("nbr_id"))
-    // stride = bits: the kNN tiers pack tables×bits = 64 exactly, every
+    // stride = bits: the kNN geometries pack tables×bits = 64 exactly, every
     // lane full. Only slim (vec_id, nbr_id, cos) rows reach the top-k
     // window shuffle.
     lshCollisionPairs(e00, dim, tables, bits, stride = bits,

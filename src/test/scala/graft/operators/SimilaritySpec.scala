@@ -222,23 +222,31 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("kNN tier geometries: measured rank-recall per KnnLshTiers row") {
-    // every KnnLshTiers geometry gets a recall number against the exact
-    // ground truth — the upper tiers never engage at fixture scale, so
-    // without forcing them here their recall would be unmeasured until
-    // a >16k-row corpus lands on them
+    // the home LSH geometry and the two retired upper ones (8x8, 4x16 —
+    // the measured reason the route past the home tier is IVF) each get
+    // a recall number against the exact ground truth
     VectorFunctions.ensureRegistered(spark)
     val e = graft.tables.Tables.embeddings(spark, dir)
     val truth = Similarity.ss6KnnExact(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallOf(found: Set[(Long, Long)]): Double =
       (found & truth).size.toDouble / truth.size
-    val recalls = Similarity.KnnLshTiers.map { case (_, tables, bits) =>
-      val rec = recallOf(Similarity.knnJoinGeom(e, 5, 64, Some((tables, bits)))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      info(f"kNN geometry ${tables}x$bits: recall@5 $rec%.3f")
-      rec
+    val recalls = Seq(Similarity.KnnLshHomeGeom, (8, 8), (4, 16)).map {
+      case (tables, bits) =>
+        val rec = recallOf(pairsOf(
+          Similarity.knnJoinGeom(e, 5, 64, Some((tables, bits)))))
+        info(f"kNN geometry ${tables}x$bits: recall@5 $rec%.3f")
+        rec
     }
     assert(recalls.head > 0.5, f"home-tier recall ${recalls.head}%.3f too low")
+    // the router's geometry choice: at fixture scale knnJoin must take
+    // the 16x4 home route, neighbor for neighbor
+    val routedPairs = pairsOf(Similarity.knnJoin(e))
+    val homePairs = pairsOf(Similarity.knnJoinGeom(e, 5, 64, Some((16, 4))))
+    assert((routedPairs diff homePairs).size + (homePairs diff routedPairs).size == 0,
+      "pairs differ between routed knnJoin and the 16x4 home geometry")
 
     // the IVF route that replaces the collapsed upper LSH tiers, at its
     // two operating points: the home analogue (8c/p6) and the routed
